@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
@@ -8,9 +8,10 @@ import org.apache.spark.sql.types.IntegerType
 import graft.functions.TextExpressions.{MinHashSignature, SimHash, Tokens, WinnowFingerprint, WordShingles}
 
 /** Session extension exposing graft's custom Catalyst expressions to
-  * SQL (`spark.sql.extensions=graft.GraftExtensions` on a cluster, or
-  * `.withExtensions(new GraftExtensions)` / [[GraftExtensions.register]]
-  * on an existing session):
+  * SQL. Every [[GraftSession.builder]] session installs it through
+  * `spark.sql.extensions=graft.GraftExtensions`; a session built
+  * elsewhere needs the same setting or
+  * `.withExtensions(new GraftExtensions)`:
   *
   * {{{
   * SELECT graft_word_shingles(text, 3) FROM documents
@@ -57,11 +58,4 @@ object GraftExtensions {
       (es: Seq[Expression]) => WinnowFingerprint(es.head,
         intLit(es(1), "graft_winnow_fingerprint"), intLit(es(2), "graft_winnow_fingerprint"))),
   )
-
-  /** Register the same functions on an already-running session. */
-  def register(spark: SparkSession): Unit =
-    descriptions.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        id.funcName, builder, "scala_udf")
-    }
 }

@@ -4,8 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Canonical session configuration for the graft engine.
   *
-  * Centralised so the CLI, Verify, Bench and every ScalaTest suite run
-  * with identical semantics:
+  * Every session — the CLI, the web preview, Verify, Bench, the
+  * profiler, the benchmark harness and the ScalaTest suites — comes from
+  * [[GraftSession.builder]], so they all run with identical semantics.
+  * Callers add only what is theirs (a temp `spark.sql.warehouse.dir`, a
+  * `spark.local.dir`); the settings below are never re-stated elsewhere:
   *  - UTC session timezone (oracle parity with DuckDB);
   *  - AQE on (runtime coalescing + skew-join splitting — the knobs that
   *    matter once this plan runs on a real cluster instead of local[32]);
@@ -13,7 +16,8 @@ import org.apache.spark.sql.SparkSession
   *    200 default (on a real cluster this would be set per-job or left
   *    to AQE's coalescing);
   *  - nanosecond parquet timestamps surfaced as longs (the events table;
-  *    see [[graft.sources.Tables]]).
+  *    see [[graft.sources.Tables]]);
+  *  - graft's `graft_*` SQL functions installed via [[GraftExtensions]];
   *  - state-store maintenance effectively disabled: this engine drains
   *    BOUNDED stream replays (parity queries, tests, bench passes),
   *    where background snapshot compaction buys nothing — but the
@@ -25,27 +29,22 @@ import org.apache.spark.sql.SparkSession
   *    snapshot maintenance is what bounds its recovery time.
   */
 object GraftSession {
+  /** The core-count-independent settings [[builder]] applies. */
+  private[graft] val settings: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    "spark.sql.streaming.stateStore.maintenanceInterval" -> "1h",
+    "spark.ui.enabled" -> "false")
+
   def builder(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
-      .config("spark.ui.enabled", "false")
-
-  /** Apply graft's required configs to an existing builder (used when the
-    * caller owns master/memory settings).
-    */
-  def tune(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
+      .config(settings.toMap)
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()

@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
 final class Tables(val spark: SparkSession, val dir: String) {
   /** Read with a session-lifetime PINNED schema (see
     * [[Tables.pinnedSchema]]): parquet schema inference costs ~50 ms of
-    * driver time per `spark.read.parquet` call (measured by
-    * [[graft.SchemaProbe]] — 50-72 ms inferred vs 5-8 ms with an
-    * explicit schema), paid on EVERY table reference of every query.
+    * driver time per `spark.read.parquet` call (measured at sf0.1 —
+    * 50-72 ms inferred vs 5-8 ms with an explicit schema), paid on
+    * EVERY table reference of every query.
     * The benchmark tables are immutable inputs, so the first inference
     * per path is authoritative for the process lifetime — exactly the
     * schema pinning a catalog (metastore / table format) gives a

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions.col
 class GraftExtensionsSpec extends SparkSpec {
 
   test("custom expressions are callable from SQL after registration") {
-    GraftExtensions.register(spark)
     val row = spark.sql(
       """SELECT graft_tokens('The quick FOX') AS t,
                 graft_word_shingles('a b c d', 3) AS s,
@@ -25,7 +24,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("SQL function output matches the Column API on real data") {
-    GraftExtensions.register(spark)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet").limit(50)
     docs.createOrReplaceTempView("docs_ext")
     val viaSql = spark.sql(
@@ -37,7 +35,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("non-literal shingle size is rejected with a clear error") {
-    GraftExtensions.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT graft_word_shingles('a b c', 1 + 2)").collect()
     }

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.{Registry, SparkSpec}
+import org.apache.spark.sql.catalyst.plans.logical.Window
+import scala.util.{Failure, Success, Try}
 
 /** Physical-plan regression guards: the properties that make these
   * queries scale (pushdown, broadcast, top-k, single-shuffle as-of)
@@ -892,5 +894,32 @@ class PlanSpec extends SparkSpec {
       try graft.ingest.FileUtils.delete(path, recursive = true): Unit
       catch { case _: Throwable => () }
     }
+  }
+
+  test("global windows: only the bounded, allowlisted ones remain across the registry") {
+    // A Window with an empty partition spec runs in ONE task — the
+    // single-partition scale smell. The survivors are bounded: a rank
+    // over an already-LIMITed top-k (qf04, txt10, hyb01, ir02), dq07's
+    // band table, dq12's missing-calendar-day set, qs01's deciles over
+    // the <= 1024-row sketch and q60's supplier-sized rewrite. The
+    // optimized (logical) plan is probed because AQE hides executed
+    // children from TreeNode.collect until execution. Stream replays
+    // (str*) and cp01 are skipped: building them runs whole pipelines.
+    val allowed = Set("q60_top_supplier", "txt10_bm25", "dq07_t_closeness",
+      "dq12_coverage_gaps", "qf04_dsir_select", "qs01_quantile_sketch",
+      "hyb01_rrf_fusion", "ir02_fusion_gain")
+    val swept = Registry.all.map(_.name)
+      .filterNot(n => n.startsWith("str") || n.startsWith("cp01"))
+    val globalWindows = swept.map { name =>
+      name -> Try(Registry.byName(name).run(spark, sf0001)
+        .queryExecution.optimizedPlan.collect {
+          case w: Window if w.partitionSpec.isEmpty => w
+        }.size)
+    }
+    val failed = globalWindows.collect { case (n, Failure(e)) => s"$n: ${e.getMessage}" }
+    assert(failed.isEmpty, s"plan construction threw:\n${failed.mkString("\n")}")
+    val flagged = globalWindows.collect { case (n, Success(k)) if k > 0 => n }
+    assert(flagged.filterNot(allowed).isEmpty,
+      s"unpartitioned Window outside the allowlist: ${flagged.filterNot(allowed)}")
   }
 }
