@@ -903,164 +903,63 @@ object Dedup {
       .orderBy("batch_id", "hist_id")
   }
 
+  private val lifecycle = new graft.ingest.IndexLifecycle(
+    Seq("bands", "shingles"), "doc_id", "stale-geometry bands")
+
   /** Persist a corpus's near-dup index — the band table plus the
     * shingle sets the verify stage needs — as two parquet tables under
     * `path`. This is the "built once, persisted and appended to" index
     * [[incrementalNearDups]]'s contract describes, as code: subsequent
     * batches probe the LOADED index ([[probeNearDupIndex]]) and extend
     * it ([[appendNearDupIndex]]) without ever recomputing a history
-    * signature. Layout: each save/append lands as ONE batch directory
-    * `batches/b<N>/{bands,shingles}` sealed by a `_COMMITTED` marker —
-    * `bands/` is (doc_id, band, bh), the probe side of the candidate
-    * equi-join; `shingles/` is (doc_id, shingles), the verify side,
-    * read semi-join-reduced to candidate docs only. The marker is the
-    * commit point: readers ignore markerless dirs and a retried append
-    * always writes a FRESH batch dir, so a crash mid-append can never
-    * leave the index half-updated (bands without shingles would
-    * silently drop verified pairs) nor a retry duplicate rows (inflated
-    * bucket counts would push buckets over maxBucket) — a poor-man's
-    * transaction log, the same idea a table format's manifest commit
-    * makes atomic on object storage.
+    * signature. Layout: `meta` holds the (num_hashes, bands) geometry;
+    * each save/append lands as ONE committed batch directory
+    * `batches/b<N>/{bands,shingles}` — `bands/` is (doc_id, band, bh),
+    * the probe side of the candidate equi-join; `shingles/` is
+    * (doc_id, shingles), the verify side, read semi-join-reduced to
+    * candidate docs only. The batch-dir commit protocol (markers,
+    * tombstones, retirement, generation-swap vacuum, save epoch, the
+    * exclusive save lease) is [[graft.ingest.IndexLifecycle]]'s — a
+    * poor-man's transaction log, the same idea a table format's
+    * manifest commit makes atomic on object storage. A save REPLACES
+    * any index at `path`, its tombstones included.
     */
   def saveNearDupIndex(corpus: DataFrame, path: String,
       numHashes: Int = 32, bands: Int = 16): Unit = {
     val hconf = corpus.sparkSession.sparkContext.hadoopConfiguration
-    // saves are the one DESTRUCTIVE lifecycle step (replace, not
-    // append), so they run under an exclusive lease — two concurrent
-    // savers would interleave the clears and rewrites into one corrupt
-    // tree (appends don't need this: claimSeqDir isolates them)
-    graft.ingest.FileUtils.withSaveLease(path, hconf)(
-      doSaveNearDupIndex(corpus, path, numHashes, bands))
-  }
-
-  private def doSaveNearDupIndex(corpus: DataFrame, path: String,
-      numHashes: Int, bands: Int): Unit = {
-    val hconf = corpus.sparkSession.sparkContext.hadoopConfiguration
-    // a save REPLACES any index at path: clear stale batches AND stale
-    // tombstones first — a leftover forgotten/ set from the previous
-    // index would silently hide any NEW doc that reuses an erased id
-    // from every probe (and the next vacuum would delete its rows)
-    graft.ingest.Generations.reset(path, hconf)
-    rmr(s"$path/forgotten", hconf)
-    // and any legacy flat-layout root tables: a save is the documented
-    // migration remedy, and for an index with right-to-erasure support
-    // the stale corpus bytes must not outlive it
-    rmr(s"$path/bands", hconf)
-    rmr(s"$path/shingles", hconf)
-    // geometry metadata FIRST: a probe against bands built with a
-    // different (numHashes, bands) would collide essentially at
-    // random and silently miss true near-dups — append/probe read the
-    // stored geometry instead of trusting a caller to repeat it.
-    // Driver-side write (TinyParquet): 1 row, no Spark job.
-    import graft.ingest.TinyParquet.IntCol
-    graft.ingest.TinyParquet.write(s"$path/meta", hconf,
-      Seq(IntCol("num_hashes"), IntCol("bands")),
-      Seq(Seq(numHashes, bands)))
-    commitIndexBatch(corpus, path, numHashes, bands)
-    // LAST step, still under the lease: advance the monotonic save
-    // epoch (Generations.saveEpoch). Ordering is load-bearing — the
-    // bump landing AFTER the replacement geometry is fully written is
-    // what lets appendNearDupIndex treat "epoch unchanged at verify"
-    // as proof its read geometry is the stored one (the gen-0 ABA fix).
-    graft.ingest.Generations.bumpSaveEpoch(path, hconf)
+    withShingleSet(corpus)(sh => lifecycle.save(path, hconf) {
+      // a save is the documented migration remedy for a legacy
+      // flat-layout index, and for an index with right-to-erasure
+      // support the stale root corpus bytes must not outlive it
+      rmr(s"$path/bands", hconf)
+      rmr(s"$path/shingles", hconf)
+      // geometry metadata FIRST: a probe against bands built with a
+      // different (numHashes, bands) would collide essentially at
+      // random and silently miss true near-dups — append/probe read the
+      // stored geometry instead of trusting a caller to repeat it.
+      // Driver-side write (TinyParquet): 1 row, no Spark job.
+      import graft.ingest.TinyParquet.IntCol
+      graft.ingest.TinyParquet.write(s"$path/meta", hconf,
+        Seq(IntCol("num_hashes"), IntCol("bands")),
+        Seq(Seq(numHashes, bands)))
+      (numHashes, bands)
+    }(writeBatchTables(sh)))
   }
 
   /** Extend a persisted index with a new batch (append-only commits,
     * under the geometry the index was SAVED with — the index never
     * rewrites history; callers dedup batches upstream via the
-    * key-idempotent ingestion path). Safe to retry: a failed attempt
-    * leaves only an uncommitted dir readers never see.
-    *
-    * SELF-HEALING against concurrent maintenance: after committing,
-    * the append waits out any live `_SAVING` holder
-    * (Generations.awaitNoLease) and verifies its fate — the batch
-    * either survived in an unchanged generation (which implies no
-    * save replaced the geometry: a save clears the batch trees, so
-    * our dir would be gone), or a vacuum folded it into the new
-    * generation (the durable consumed manifest says so), or it died
-    * with a replaced/swept tree and is re-committed against the
-    * CURRENT index state (geometry re-read per attempt). Nothing is
-    * lost, nothing duplicates.
+    * key-idempotent ingestion path). Self-healing against concurrent
+    * maintenance ([[graft.ingest.IndexLifecycle.append]]): the geometry
+    * is re-read per attempt, so stale-geometry bands never stay live.
     */
   def appendNearDupIndex(batch: DataFrame, path: String): Unit = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
+    val conf = batch.sparkSession.sparkContext.hadoopConfiguration
     rejectLegacyLayout(path, conf)
     // one shingle pass feeds every attempt (signatures re-derive only
     // if the geometry changed)
-    val sh = withShingles(batch).select(col("doc_id"), col("shingles"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var attempts = 0
-      var done = false
-      while (!done) {
-        attempts += 1
-        require(attempts <= 8,
-          s"append to $path kept losing maintenance races after 8 attempts")
-        // the whole attempt tolerates exceptions: a maintenance sweep
-        // can delete the tree UNDER a mid-flight write (the marker is
-        // touched last, so a failed attempt is an invisible markerless
-        // dir); verification then sends us around again. A genuine,
-        // persistent write failure keeps failing and surfaces through
-        // the attempt bound.
-        val committed =
-          try {
-            // epoch FIRST, then geometry: a save bumps the monotonic
-            // epoch only after its replacement meta is fully written,
-            // so epoch unchanged at verify ⟹ the geometry read HERE
-            // is the stored one — closes the gen-0 ABA hole (a save's
-            // reset keeps generation 0 and the same `batches` name)
-            val epoch0 = graft.ingest.Generations.saveEpoch(path, conf)
-            val (nh, b) = indexGeometry(s, path)
-            val base = graft.ingest.Generations.currentBatchesDir(path, conf)
-            val bdir = graft.ingest.FileUtils.claimSeqDir(base, "b", conf)
-            try {
-              writeBatchTables(sh, bdir, nh, b)
-              graft.ingest.FileUtils.touch(s"$bdir/_COMMITTED", conf)
-              Some((epoch0, base, bdir))
-            } catch {
-              case _: Exception if attempts < 8 =>
-                // the marker op itself may have half-landed before the
-                // failure — best-effort removal so a retry can never
-                // double-commit into a tree that is actually live
-                try graft.ingest.FileUtils.delete(
-                  s"$bdir/_COMMITTED", recursive = false, conf): Unit
-                catch { case _: Exception => () }
-                None
-            }
-          } catch { case _: Exception if attempts < 8 => None }
-        graft.ingest.Generations.awaitNoLease(path, conf)
-        // marker survived + generation unchanged + SAVE EPOCH
-        // unchanged ⟹ no maintenance replaced the index since our
-        // geometry read: a vacuum flips the generation, and a save —
-        // which keeps gen 0 and the same dir name — always bumps the
-        // monotonic epoch, so the (num_hashes, bands) we banded under
-        // is provably the stored one. Shared verification
-        // (Generations.verifyAppendCommit): happy path stays
-        // filesystem checks only (no meta parquet re-read); the
-        // consumed arm checks the epoch TOO and fails loudly on
-        // mismatch (a consumed stale-geometry batch cannot be
-        // retracted); false sends us to the retract + retry below,
-        // which re-reads the geometry.
-        done = committed.exists { case (epoch0, base, bdir) =>
-          graft.ingest.Generations.verifyAppendCommit(path, epoch0, base,
-            bdir, "stale-geometry bands", conf)
-        }
-        // RETRACT a commit that failed verification before retrying:
-        // a dir that survived a save's reset (landed after the tree
-        // clear) holds possibly stale-geometry bands AND would be
-        // duplicated by the retry — marker delete first (one atomic
-        // op takes it out of every read), then the bytes; dirs that
-        // died with a swept tree make this a no-op.
-        if (!done) committed.foreach { case (_, _, bdir) =>
-          try {
-            graft.ingest.FileUtils.delete(
-              s"$bdir/_COMMITTED", recursive = false, conf): Unit
-            graft.ingest.FileUtils.rmr(bdir, conf)
-          } catch { case _: Exception => () }
-        }
-      }
-    } finally { sh.unpersist(blocking = false); () }
+    withShingleSet(batch)(sh => lifecycle.append(path, conf)(
+      indexGeometry(batch.sparkSession, path))(writeBatchTables(sh)))
   }
 
   // An index persisted by the pre-batch-dir layout has bands/shingles
@@ -1080,30 +979,14 @@ object Dedup {
         s"$path holds a legacy flat-layout index (root $t/ table); " +
           "re-save it with saveNearDupIndex before appending or probing"))
 
-  // one shingle pass feeds BOTH writes: the band table and the
+  // One shingle pass feeds BOTH batch tables: the band table and the
   // shingle table share lineage from a persisted shingle set —
   // unshared, every save/append would tokenize and shingle the corpus
-  // twice (the very pass probeCore exists to avoid repeating)
-  // One-shot batch commit, called from the SAVE path (which holds the
-  // exclusive lease, so there is nothing to race and no verification
-  // loop — appendNearDupIndex owns the self-healing variant). The id
-  // is reserved via an atomic claim-file create BEFORE anything is
-  // written (FileUtils.claimSeqDir): two CONCURRENT appenders can
-  // never pick the same dir and interleave part files under one
-  // _COMMITTED — the corruption a bare max(existing)+1 listing
-  // allows. An abandoned claim's id is never reused, so partial files
-  // can never be mistaken for a later batch's.
-  private def commitIndexBatch(corpus: DataFrame, path: String,
-      numHashes: Int, bands: Int): Unit = {
-    val conf = corpus.sparkSession.sparkContext.hadoopConfiguration
-    val bdir = graft.ingest.FileUtils.claimSeqDir(
-      graft.ingest.Generations.currentBatchesDir(path, conf), "b", conf)
-    val sh = withShingles(corpus).select(col("doc_id"), col("shingles"))
+  // twice (the very pass probeCore exists to avoid repeating).
+  private def withShingleSet[T](docs: DataFrame)(f: DataFrame => T): T = {
+    val sh = withShingles(docs).select(col("doc_id"), col("shingles"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      writeBatchTables(sh, bdir, numHashes, bands)
-      graft.ingest.FileUtils.touch(s"$bdir/_COMMITTED", conf)
-    } finally { sh.unpersist(blocking = false); () }
+    try f(sh) finally { sh.unpersist(blocking = false); () }
   }
 
   // The two batch tables derive from ONE persisted shingle set and are
@@ -1115,12 +998,13 @@ object Dedup {
   // paid shingle-compute + band-compute + two write tails end to end.
   // Failure semantics are unchanged: both futures are awaited, the
   // first failure rethrows BEFORE the commit marker is touched.
-  private def writeBatchTables(sh: DataFrame, bdir: String,
-      numHashes: Int, bands: Int): Unit = {
+  private def writeBatchTables(sh: DataFrame)(geometry: (Int, Int),
+      bdir: String): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
+    val (numHashes, bands) = geometry
     val fBands = Future(bandTableFromShingles(sh, numHashes, bands)
       .write.mode("overwrite").parquet(s"$bdir/bands"))
     val fSh = Future(sh.write.mode("overwrite").parquet(s"$bdir/shingles"))
@@ -1131,51 +1015,26 @@ object Dedup {
     r1.get; r2.get
   }
 
-  private def committedBatchDirs(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
-    rejectLegacyLayout(path, conf)
-    // live = committed and not retired, within the LIVE generation
-    // (Generations.currentBatchesDir — a staged vacuum tree without
-    // its gen marker is invisible here): a batch retired by
-    // [[retireIndexBatches]] is out of every read the moment its
-    // marker lands, its bytes gone at the next vacuum
-    val base = graft.ingest.Generations.currentBatchesDir(path, conf)
-    val dirs = graft.ingest.FileUtils.listSubdirs(base, conf)
-      .filter(d => graft.ingest.FileUtils.exists(s"$d/_COMMITTED", conf) &&
-        !graft.ingest.FileUtils.exists(s"$d/_RETIRED", conf))
-    require(dirs.nonEmpty,
-      s"no live committed index batches under $base")
-    dirs
-  }
-
   /** ROLLING-WINDOW retention for the persisted index — the time-axis
     * governance half next to [[forgetFromIndex]]'s by-key path, for
     * the deployment that dedups new data against a bounded window of
     * history (a 90-day crawl window) instead of all time: batches ARE
     * the index's arrival order, so retention retires every committed
-    * batch except the newest `keepLast` by dropping a `_RETIRED`
+    * batch except the newest `keepLast` by dropping a retirement
     * marker into each — metadata-only, cost O(retired batches), no
     * state rewrite and no source scan (the gov06 warehouse-retention
-    * economics applied to the index). Every subsequent probe reads
-    * only live batches; bytes disappear at the next [[vacuumIndex]]
-    * (whose compacted rewrite also makes the retirement permanent —
-    * retired dirs are simply not carried over). Retired ids are never
-    * reclaimed (claim files persist), so a retire-then-append can
-    * never resurrect an expired batch under its old id. Returns the
-    * newly retired batch ids.
+    * economics applied to the index), run under the save lease
+    * ([[graft.ingest.IndexLifecycle.retire]]). Every subsequent probe
+    * reads only live batches; bytes disappear at the next
+    * [[vacuumIndex]] (whose compacted rewrite also makes the
+    * retirement permanent — retired dirs are simply not carried over).
+    * Returns the newly retired batch ids.
     */
   def retireIndexBatches(s: SparkSession, path: String,
       keepLast: Int): Seq[Long] = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val conf = s.sparkContext.hadoopConfiguration
-    val live = committedBatchDirs(path, conf)
-      .map(d => new org.apache.hadoop.fs.Path(d).getName
-        .stripPrefix("b").toLong).sorted
-    val retire = live.dropRight(keepLast)
-    val base = graft.ingest.Generations.currentBatchesDir(path, conf)
-    retire.foreach(id =>
-      graft.ingest.FileUtils.touch(s"$base/b$id/_RETIRED", conf))
-    retire
+    rejectLegacyLayout(path, conf)
+    lifecycle.retire(path, conf, keepLast)
   }
 
   // geometry is a 1-row manifest: read driver-side (TinyParquet), no
@@ -1198,21 +1057,18 @@ object Dedup {
     */
   def probeNearDupIndex(s: SparkSession, path: String, batch: DataFrame,
       threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
+    val conf = s.sparkContext.hadoopConfiguration
     // legacy check before indexGeometry's meta read errors first
-    rejectLegacyLayout(path, s.sparkContext.hadoopConfiguration)
+    rejectLegacyLayout(path, conf)
     val (nh, b) = indexGeometry(s, path)
-    val dirs = committedBatchDirs(path, s.sparkContext.hadoopConfiguration)
-    val bands = s.read.parquet(dirs.map(_ + "/bands"): _*)
-    val sh = s.read.parquet(dirs.map(_ + "/shingles"): _*)
+    val dirs = lifecycle.committedBatchDirs(path, conf)
     // logical erasure: tombstoned docs are invisible to every probe —
     // including the bucket-size counts, so a forgotten boilerplate doc
     // stops inflating its bucket immediately
-    val (fb, fs) = tombstoneIds(s, path) match {
-      case Some(t) => (bands.join(t, Seq("doc_id"), "left_anti"),
-        sh.join(t, Seq("doc_id"), "left_anti"))
-      case None => (bands, sh)
-    }
-    probeCore(fb, fs, batch, threshold, nh, b, maxBucket)
+    val keep = lifecycle.dropForgotten(s, path)
+    probeCore(keep(lifecycle.read(s, dirs, "bands")),
+      keep(lifecycle.read(s, dirs, "shingles")),
+      batch, threshold, nh, b, maxBucket)
   }
 
   /** Probe the NEWEST committed batch of a persisted index against the
@@ -1230,97 +1086,45 @@ object Dedup {
     */
   def probeNewestIndexBatch(s: SparkSession, path: String,
       threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
-    val dirs = committedBatchDirs(path, s.sparkContext.hadoopConfiguration)
+    val conf = s.sparkContext.hadoopConfiguration
+    rejectLegacyLayout(path, conf)
+    val dirs = lifecycle.committedBatchDirs(path, conf)
     // numeric max, not the listing's lexicographic sort (b10 < b2 there)
-    val newest = dirs.maxBy(d =>
-      new org.apache.hadoop.fs.Path(d).getName.stripPrefix("b").toLong)
-    val bands = s.read.parquet(dirs.map(_ + "/bands"): _*)
-    val sh = s.read.parquet(dirs.map(_ + "/shingles"): _*)
+    val newest = Seq(dirs.maxBy(lifecycle.batchId))
     // tombstones filter BOTH sides: an erased doc in the newest batch
     // must neither be probed against history nor drive a drop set —
     // "invisible to every probe" (gov02) includes the probe side
-    val tomb = tombstoneIds(s, path)
-    def keep(df: DataFrame): DataFrame =
-      tomb.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-    probeCoreFromParts(keep(bands), keep(sh),
-      keep(s.read.parquet(s"$newest/bands")),
-      keep(s.read.parquet(s"$newest/shingles")
+    val keep = lifecycle.dropForgotten(s, path)
+    probeCoreFromParts(keep(lifecycle.read(s, dirs, "bands")),
+      keep(lifecycle.read(s, dirs, "shingles")),
+      keep(lifecycle.read(s, newest, "bands")),
+      keep(lifecycle.read(s, newest, "shingles")
         .select(col("doc_id"), col("shingles"))),
       threshold, maxBucket)
   }
 
   // ----- right-to-erasure for the persisted index (gov02) ------------
 
-  private def tombstoneIds(s: SparkSession, path: String): Option[DataFrame] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val dirs = graft.ingest.FileUtils.listSubdirs(s"$path/forgotten", conf)
-      .filter(d => graft.ingest.FileUtils.exists(s"$d/_COMMITTED", conf))
-    if (dirs.isEmpty) None
-    else Some(s.read.parquet(dirs.map(_ + "/ids"): _*)
-      .select(col("doc_id").cast("bigint").as("doc_id")).distinct())
-  }
-
   /** Logical right-to-erasure: record `ids` as tombstones next to the
-    * index (append-only, marker-sealed — the data batches' commit
-    * protocol), making them invisible to every subsequent
-    * [[probeNearDupIndex]] without touching the stored tables. A
-    * governance request is answered the moment the tombstone commits;
-    * the bytes disappear at the next [[vacuumIndex]]. Durability
-    * assumes doc ids are stable entity keys: a request re-recorded
-    * across a concurrent full re-save applies to the new index's doc
-    * under the same id (recycling ids for different content across
-    * replaces is a caller data-modeling error).
+    * index (append-only, marker-sealed, self-healing against concurrent
+    * maintenance — [[graft.ingest.IndexLifecycle.forget]]), making them
+    * invisible to every subsequent [[probeNearDupIndex]] without
+    * touching the stored tables. A governance request is answered the
+    * moment the tombstone commits; the bytes disappear at the next
+    * [[vacuumIndex]]. Durability assumes doc ids are stable entity
+    * keys: a request re-recorded across a concurrent full re-save
+    * applies to the new index's doc under the same id (recycling ids
+    * for different content across replaces is a caller data-modeling
+    * error).
     */
-  def forgetFromIndex(s: SparkSession, path: String, ids: DataFrame): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    // SELF-HEALING like appendNearDupIndex: a vacuum sweeps the
-    // tombstone log after folding ITS snapshot of it in, and a save
-    // clears it wholesale — a request committed inside either window
-    // could vanish before it was ever applied. Post-commit, wait out
-    // any live maintenance writer and re-record if our log entry is
-    // gone (idempotent: a tombstone for already-removed rows filters
-    // nothing). A governance request can never be silently dropped.
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      require(attempts <= 8,
-        s"forget on $path kept losing maintenance races after 8 attempts")
-      // same claim protocol as data batches: concurrent governance
-      // requests must not share an f<N> dir. The attempt tolerates
-      // exceptions — a vacuum's log sweep can delete the dir under a
-      // mid-flight write — and re-records until a committed entry
-      // survives a lease-free observation.
-      val fdir =
-        try {
-          val d = graft.ingest.FileUtils.claimSeqDir(s"$path/forgotten", "f", conf)
-          try {
-            ids.select(col("doc_id").cast("bigint").as("doc_id"))
-              .write.mode("overwrite").parquet(s"$d/ids")
-            graft.ingest.FileUtils.touch(s"$d/_COMMITTED", conf)
-            Some(d)
-          } catch {
-            case _: Exception if attempts < 8 =>
-              try graft.ingest.FileUtils.delete(
-                s"$d/_COMMITTED", recursive = false, conf): Unit
-              catch { case _: Exception => () }
-              None
-          }
-        } catch { case _: Exception if attempts < 8 => None }
-      graft.ingest.Generations.awaitNoLease(path, conf)
-      done = fdir.exists(d =>
-        graft.ingest.FileUtils.exists(s"$d/_COMMITTED", conf))
-    }
-  }
+  def forgetFromIndex(s: SparkSession, path: String, ids: DataFrame): Unit =
+    lifecycle.forget(path, ids)
 
   /** PHYSICAL erasure: rewrite the index without the tombstoned docs'
     * band and shingle rows — the GDPR-compliance half a tombstone
     * alone doesn't deliver (the forgotten text's shingles would still
-    * sit in parquet). The rewrite is CRASH-ATOMIC via the Generations
-    * manifest swap (the "production deployment puts a manifest swap
-    * here" trade earlier rounds documented as open, now closed): the
-    * compacted single batch is staged as the next generation's tree
-    * and flips live with one atomic marker create — readers see
+    * sit in parquet). The rewrite is crash-atomic and runs under the
+    * save lease ([[graft.ingest.IndexLifecycle.vacuum]]): readers see
     * exactly the old index or exactly the new one, never a mix and
     * never an absence. Geometry metadata is untouched (a vacuum never
     * changes the index identity).
@@ -1333,41 +1137,8 @@ object Dedup {
     * identical probe results (spec-pinned alongside the erasure case).
     */
   def vacuumIndex(s: SparkSession, path: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    // a vacuum is a destructive replace, so it takes the SAME
-    // exclusive lease saves do: a vacuum racing a save fails loudly
-    graft.ingest.FileUtils.withSaveLease(path, conf) {
-      val tomb = tombstoneIds(s, path)
-      def keep(df: DataFrame): DataFrame =
-        tomb.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-      val dirs = committedBatchDirs(path, conf)
-      // CRASH-ATOMIC manifest swap (Generations): the compacted state
-      // is STAGED as the next generation's tree — invisible to every
-      // reader — and flips live with ONE atomic marker create; a crash
-      // before the marker leaves the old generation serving (orphan
-      // stage swept by the next vacuum), a crash after leaves only
-      // stale bytes the sweep below would have removed. There is no
-      // window in which a reader sees half an index.
-      val (gen, stage) = graft.ingest.Generations.stageNextGen(path, conf)
-      keep(s.read.parquet(dirs.map(_ + "/bands"): _*))
-        .write.parquet(s"$stage/b0/bands")
-      keep(s.read.parquet(dirs.map(_ + "/shingles"): _*))
-        .write.parquet(s"$stage/b0/shingles")
-      graft.ingest.FileUtils.touch(s"$stage/b0/_COMMITTED", conf)
-      // the durable record of WHICH batches this compaction folded in
-      // — what lets an append racing this vacuum tell "my rows live
-      // on in b0" from "my batch died with the old tree" (the
-      // commitIndexBatch retry loop)
-      graft.ingest.Generations.recordConsumed(path, gen, dirs, conf)
-      require(graft.ingest.Generations.commitGeneration(path, gen, conf),
-        s"generation $gen of $path was committed concurrently — " +
-          "another vacuum ran despite the save lease")
-      // best-effort cleanup AFTER the commit point: old generations'
-      // bytes and the now-folded-in tombstone log (applied tombstones
-      // re-filter rows the compaction already dropped — a no-op)
-      graft.ingest.Generations.sweepStale(path, conf)
-      rmr(s"$path/forgotten", conf)
-    }
+    rejectLegacyLayout(path, s.sparkContext.hadoopConfiguration)
+    lifecycle.vacuum(s, path)
   }
 
   /** BUCKET-SKEW AUDIT for the persisted near-dup index — the
@@ -1389,16 +1160,8 @@ object Dedup {
     */
   def auditIndexBuckets(s: SparkSession, path: String,
       cap: Int = 1000): DataFrame = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val dirs = committedBatchDirs(path, conf)
-    val stored = dirs.map { d =>
-      val bid = new org.apache.hadoop.fs.Path(d).getName
-        .stripPrefix("b").toLong
-      s.read.parquet(s"$d/bands").withColumn("batch_id", lit(bid))
-    }.reduce(_.unionByName(_))
-    val bands = tombstoneIds(s, path)
-      .fold(stored)(t => stored.join(t, Seq("doc_id"), "left_anti"))
-    bands.groupBy(col("batch_id"), col("band"), col("bh"))
+    rejectLegacyLayout(path, s.sparkContext.hadoopConfiguration)
+    lifecycle.rowsByBatch(s, path, "bands").groupBy(col("batch_id"), col("band"), col("bh"))
       .agg(count(lit(1)).as("n"))
       .groupBy("batch_id")
       .agg(sum(col("n")).cast("bigint").as("n_rows"),

@@ -6,25 +6,26 @@ import graft.QueryDef
 import graft.ingest.FileUtils.rmr
 import graft.sources.Tables
 
-/** Persisted IVF-PQ vector index — the dedup side's marker-sealed
-  * index lifecycle (Dedup.saveNearDupIndex, dd16) applied to the ANN
-  * family: a 100-TB retrieval deployment builds the index ONCE and
-  * probes it incrementally, rather than re-deriving quantizers and
-  * re-encoding the corpus per query run the way the from-scratch
-  * searches (Similarity.ivfPqTopK) do by design.
+/** Persisted IVF-PQ vector index — the persisted-index lifecycle
+  * ([[graft.ingest.IndexLifecycle]]: marker-sealed batch dirs,
+  * tombstones, retirement, generation-swap vacuum, save epoch; shared
+  * with Dedup's near-dup index, dd16) applied to the ANN family: a
+  * 100-TB retrieval deployment builds the index ONCE and probes it
+  * incrementally, rather than re-deriving quantizers and re-encoding
+  * the corpus per query run the way the from-scratch searches
+  * (Similarity.ivfPqTopK) do by design.
   *
-  * Layout under `path`:
+  * Layout under `path` (the batch/tombstone/generation layout is
+  * IndexLifecycle's):
   *  - `meta`      — (n_cells, n_sub, sub_dim) geometry. Append and
   *    probe read the STORED geometry and quantizers, so a probe
   *    against an index built with different parameters is
-  *    structurally impossible (the saveNearDupIndex contract).
+  *    structurally impossible.
+  *  - `train_ids` — the vec_ids the quantizers were trained on.
   *  - `centroids` — (cell, v) coarse quantizer, nCells rows.
   *  - `codebook`  — (code, rv) shared residual codebook, nCodes rows.
   *  - `batches/b<N>/codes` — (cid, cell, code_0..code_{nSub-1}), one
-  *    dir per save/append, sealed by a `_COMMITTED` marker: readers
-  *    ignore markerless dirs and a retried append always writes a
-  *    FRESH dir, so a crash mid-append can neither leave the index
-  *    half-updated nor a retry duplicate vectors.
+  *    committed dir per save/append.
   *
   * Scale shape: the stored image is the PQ-compressed corpus (one
   * int cell + nSub byte-range codes per vector — ~the FAISS IVFADC
@@ -36,32 +37,28 @@ import graft.sources.Tables
   */
 object VectorIndex {
 
+  private val lifecycle = new graft.ingest.IndexLifecycle(
+    Seq("codes"), "cid", "stale-model codes")
+
   /** Persist a corpus's vector index at `path`, REPLACING any index
     * there (stale batches from a previous geometry must not survive a
-    * re-save — a probe would union incompatible code tables).
+    * re-save — a probe would union incompatible code tables), under
+    * the exclusive save lease. The replace also clears the tombstone
+    * log: the documented remedy for erasing a training vector lands
+    * HERE, so it must not inherit the tombstone that prompted it.
     */
   def saveVectorIndex(emb: DataFrame, path: String, nCells: Int = 16,
       nSub: Int = 8, subDim: Int = 8, nCodes: Int = 16): Unit = {
     val conf = emb.sparkSession.sparkContext.hadoopConfiguration
-    // destructive replace → exclusive lease, the saveNearDupIndex
-    // contract: a second concurrent saver fails loudly instead of
-    // interleaving clears and rewrites
-    graft.ingest.FileUtils.withSaveLease(path, conf)(
-      doSaveVectorIndex(emb, path, nCells, nSub, subDim, nCodes))
+    lifecycle.save(path, conf)(writeModel(emb, path, nCells, nSub, subDim,
+      nCodes))(writeCodes(emb))
   }
 
-  private def doSaveVectorIndex(emb: DataFrame, path: String, nCells: Int,
-      nSub: Int, subDim: Int, nCodes: Int): Unit = {
+  // Train the quantizers on the pinned rows and write the index state
+  // a save starts from; returns the model the first batch encodes under.
+  private def writeModel(emb: DataFrame, path: String, nCells: Int,
+      nSub: Int, subDim: Int, nCodes: Int): Similarity.IvfPqModel = {
     val conf = emb.sparkSession.sparkContext.hadoopConfiguration
-    graft.ingest.Generations.reset(path, conf)
-    // a save REPLACES the index: stale tombstones from the previous
-    // index would silently hide any NEW vector reusing an erased id
-    // from every probe, and the next vacuum would delete its rows
-    // (the saveNearDupIndex re-save contract — and the documented
-    // remedy for erasing a training vector lands HERE, so it must not
-    // inherit the tombstone that prompted it)
-    rmr(s"$path/forgotten", conf)
-    val s = emb.sparkSession
     // ONE bounded collect serves training AND the persisted id list
     val pinned = Similarity.pinnedTrainRows(emb, nCells + nCodes)
     val model = Similarity.trainIvfPqPinned(pinned.map(_._2),
@@ -87,105 +84,25 @@ object VectorIndex {
     graft.ingest.TinyParquet.write(s"$path/codebook", conf,
       Seq(IntCol("code"), DoubleArrayCol("rv")),
       model.rcb.zipWithIndex.map { case (v, i) => Seq[Any](i, v.toSeq) }.toSeq)
-    commitCodesBatch(emb, path, model)
-    // LAST step, still under the lease: advance the monotonic save
-    // epoch (Generations.saveEpoch). Ordering is load-bearing — the
-    // bump landing AFTER the replacement quantizers are fully written
-    // is what lets appendVectorIndex treat "epoch unchanged at verify"
-    // as proof its loaded model is the stored one (the gen-0 ABA fix).
-    graft.ingest.Generations.bumpSaveEpoch(path, conf)
+    model
   }
+
+  private def writeCodes(batch: DataFrame)(model: Similarity.IvfPqModel,
+      bdir: String): Unit =
+    Similarity.encodeIvfPq(batch, model)
+      .write.mode("overwrite").parquet(s"$bdir/codes")
 
   /** Extend a persisted index with a new batch, encoded under the
     * quantizers the index was SAVED with (append-only commits; the
-    * index never rewrites history). Safe to retry: a failed attempt
-    * leaves only an uncommitted dir readers never see.
-    *
-    * SELF-HEALING against concurrent maintenance (the
-    * Dedup.appendNearDupIndex contract): post-commit, wait out any
-    * live `_SAVING` holder, then verify — marker survived in an
-    * unchanged generation (which implies no save replaced the
-    * quantizers: a save clears the batch trees, so our dir would be
-    * gone), or folded into a vacuum's new generation (consumed
-    * manifest), or it died with a replaced/swept tree and is
-    * re-encoded against the CURRENT model (re-loaded per attempt —
-    * stale-model codes can never land in a retrained index).
+    * index never rewrites history). Self-healing against concurrent
+    * maintenance ([[graft.ingest.IndexLifecycle.append]]): the model is
+    * re-loaded per attempt, so stale-model codes can never land in a
+    * retrained index.
     */
-  def appendVectorIndex(batch: DataFrame, path: String): Unit = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      require(attempts <= 8,
-        s"append to $path kept losing maintenance races after 8 attempts")
-      // attempt tolerates exceptions (a sweep can delete the tree
-      // under a mid-flight write; the marker is touched last, so a
-      // failed attempt is invisible) — the Dedup.appendNearDupIndex
-      // contract; a persistent failure surfaces via the bound
-      val committed =
-        try {
-          // epoch FIRST, then model: a save bumps the epoch only after
-          // its replacement quantizers are fully written, so epoch
-          // unchanged at verify ⟹ the model loaded HERE is the stored
-          // one — the check that closes the gen-0 ABA hole (a save's
-          // reset keeps generation 0 and the same `batches` dir name)
-          val epoch0 = graft.ingest.Generations.saveEpoch(path, conf)
-          val model = loadModel(s, path)
-          val base = graft.ingest.Generations.currentBatchesDir(path, conf)
-          val bdir = graft.ingest.FileUtils.claimSeqDir(base, "b", conf)
-          try {
-            Similarity.encodeIvfPq(batch, model)
-              .write.mode("overwrite").parquet(s"$bdir/codes")
-            graft.ingest.FileUtils.touch(s"$bdir/_COMMITTED", conf)
-            Some((epoch0, base, bdir))
-          } catch {
-            case _: Exception if attempts < 8 =>
-              // a half-landed marker must not let a retry double-commit
-              try graft.ingest.FileUtils.delete(
-                s"$bdir/_COMMITTED", recursive = false, conf): Unit
-              catch { case _: Exception => () }
-              None
-          }
-        } catch { case _: Exception if attempts < 8 => None }
-      graft.ingest.Generations.awaitNoLease(path, conf)
-      // marker survived + generation unchanged + SAVE EPOCH unchanged
-      // ⟹ no maintenance replaced the index since our model load: a
-      // vacuum flips the generation, and a save — which keeps gen 0
-      // and the same dir name — always bumps the monotonic epoch, so
-      // the quantizers we encoded under are provably the stored ones.
-      // Shared verification (Generations.verifyAppendCommit — see its
-      // scaladoc): happy path is filesystem checks only; the consumed
-      // arm checks the epoch TOO and fails loudly on mismatch (a
-      // consumed stale-model batch cannot be retracted); false sends
-      // us to the retract + retry below, which reloads the model.
-      done = committed.exists { case (epoch0, base, bdir) =>
-        graft.ingest.Generations.verifyAppendCommit(path, epoch0, base,
-          bdir, "stale-model codes", conf)
-      }
-      // RETRACT a commit that failed verification before retrying: if
-      // the dir survived a save's reset (landed after the tree clear),
-      // its codes may be stale-model and the retry would duplicate the
-      // batch on top — delete the marker first (one atomic op takes
-      // the dir out of every read), then the bytes. Dirs that died
-      // with a swept tree make this a no-op.
-      if (!done) committed.foreach { case (_, _, bdir) =>
-        try {
-          graft.ingest.FileUtils.delete(
-            s"$bdir/_COMMITTED", recursive = false, conf): Unit
-          graft.ingest.FileUtils.rmr(bdir, conf)
-        } catch { case _: Exception => () }
-      }
-    }
-  }
+  def appendVectorIndex(batch: DataFrame, path: String): Unit =
+    lifecycle.append(path, batch.sparkSession.sparkContext.hadoopConfiguration)(
+      loadModel(batch.sparkSession, path))(writeCodes(batch))
 
-  /** Probe a persisted index: score `queries` (a bounded vector set
-    * carrying vec_id + embedding) against the STORED code table via
-    * per-(query, probed-cell) ADC lookup tables — identical arithmetic
-    * to the from-scratch Similarity.ivfPqTopK (shared kernel), with
-    * the corpus side read from parquet instead of re-encoded.
-    */
   /** Hard ceiling on probe-batch size: each query vector becomes
     * nProbe broadcast ADC lookup tables, so the collect below is
     * driver-bounded by design — an unbounded query set must be chunked
@@ -200,12 +117,8 @@ object VectorIndex {
     */
   private def loadCoded(s: SparkSession, path: String): (Similarity.IvfPqModel, DataFrame) = {
     val model = loadModel(s, path)
-    val stored = s.read.parquet(
-      committedBatchDirs(path, s.sparkContext.hadoopConfiguration)
-        .map(_ + "/codes"): _*)
-    val coded = tombstoneIds(s, path)
-      .fold(stored)(t => stored.join(t, Seq("cid"), "left_anti"))
-    (model, coded)
+    val dirs = lifecycle.committedBatchDirs(path, s.sparkContext.hadoopConfiguration)
+    (model, lifecycle.dropForgotten(s, path)(lifecycle.read(s, dirs, "codes")))
   }
 
   /** Bounded query collect shared by the LUT probes: the limit(cap+1)
@@ -234,7 +147,13 @@ object VectorIndex {
           "call (each becomes nProbe broadcast ADC tables) and has no " +
           "distributed bulk twin; chunk the query set"))
 
-  /** AUTO-ROUTED probe: query sets within `maxDriverQueries` run the
+  /** Probe a persisted index: score `queries` (a bounded vector set
+    * carrying vec_id + embedding) against the STORED code table via
+    * per-(query, probed-cell) ADC lookup tables — identical arithmetic
+    * to the from-scratch Similarity.ivfPqTopK (shared kernel), with
+    * the corpus side read from parquet instead of re-encoded.
+    *
+    * AUTO-ROUTED: query sets within `maxDriverQueries` run the
     * LUT plan (per-query broadcast ADC tables — the latency shape for
     * interactive top-k); larger sets DELEGATE to [[probeVectorIndexBulk]]
     * instead of failing — the two plans are proven row-identical
@@ -382,19 +301,10 @@ object VectorIndex {
 
   // ----- right-to-erasure for the persisted vector index (sim13) -----
 
-  private def tombstoneIds(s: SparkSession, path: String): Option[DataFrame] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val dirs = graft.ingest.FileUtils.listSubdirs(s"$path/forgotten", conf)
-      .filter(d => graft.ingest.FileUtils.exists(s"$d/_COMMITTED", conf))
-    if (dirs.isEmpty) None
-    else Some(s.read.parquet(dirs.map(_ + "/ids"): _*)
-      .select(col("cid").cast("long").as("cid")).distinct())
-  }
-
-  /** Logical right-to-erasure (the Dedup.forgetFromIndex contract for
-    * vectors): record `ids` (a `vec_id` column) as marker-sealed
-    * tombstones; every subsequent [[probeVectorIndex]] filters them
-    * out of the stored code table before scoring. Bytes disappear at
+  /** Logical right-to-erasure ([[graft.ingest.IndexLifecycle.forget]]):
+    * record `ids` (a `vec_id` column) as marker-sealed tombstones;
+    * every subsequent [[probeVectorIndex]] filters them out of the
+    * stored code table before scoring. Bytes disappear at
     * [[vacuumVectorIndex]].
     *
     * GUARDED governance caveat, unique to the vector index: the
@@ -422,79 +332,21 @@ object VectorIndex {
       s"$trainIds forget ids are quantizer-training vectors — their " +
         "coordinates are embedded in centroids/codebook; rebuild the " +
         "index without them (rebuildVectorIndex) instead of tombstoning")
-    val conf = s.sparkContext.hadoopConfiguration
-    // self-healing against a concurrent vacuum's log sweep or a
-    // save's log clear (the Dedup.forgetFromIndex contract):
-    // re-record until the committed entry survives a lease-free
-    // observation — a governance request can never be silently dropped
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      require(attempts <= 8,
-        s"forget on $path kept losing maintenance races after 8 attempts")
-      // same claim protocol as data batches: concurrent governance
-      // requests must not share an f<N> dir; exception-tolerant like
-      // Dedup.forgetFromIndex (a sweep can delete the dir mid-write)
-      val fdir =
-        try {
-          val d = graft.ingest.FileUtils.claimSeqDir(s"$path/forgotten", "f", conf)
-          try {
-            ids.select(col("vec_id").cast("long").as("cid"))
-              .write.mode("overwrite").parquet(s"$d/ids")
-            graft.ingest.FileUtils.touch(s"$d/_COMMITTED", conf)
-            Some(d)
-          } catch {
-            case _: Exception if attempts < 8 =>
-              try graft.ingest.FileUtils.delete(
-                s"$d/_COMMITTED", recursive = false, conf): Unit
-              catch { case _: Exception => () }
-              None
-          }
-        } catch { case _: Exception if attempts < 8 => None }
-      graft.ingest.Generations.awaitNoLease(path, conf)
-      done = fdir.exists(d =>
-        graft.ingest.FileUtils.exists(s"$d/_COMMITTED", conf))
-    }
+    lifecycle.forget(path, ids.select(col("vec_id").as("cid")))
   }
 
   /** PHYSICAL erasure: rewrite the code table without tombstoned rows
     * (one compacted committed batch) and clear the tombstones —
     * quantizer state is untouched because [[forgetFromVectorIndex]]
-    * already refused training ids. CRASH-ATOMIC via the Generations
-    * manifest swap (Dedup.vacuumIndex's protocol: stage, one atomic
-    * marker create, sweep) — and, like it, with no
-    * tombstones outstanding this is BATCH COMPACTION: a
-    * maintenance vacuum folds an append-heavy index's many b<N> dirs
-    * into one committed batch with identical probe results
-    * (spec-pinned), shedding the per-batch file costs probes pay.
+    * already refused training ids. Crash-atomic under the save lease
+    * ([[graft.ingest.IndexLifecycle.vacuum]]); with no tombstones
+    * outstanding this is BATCH COMPACTION: a maintenance vacuum folds
+    * an append-heavy index's many b<N> dirs into one committed batch
+    * with identical probe results (spec-pinned), shedding the
+    * per-batch file costs probes pay.
     */
-  def vacuumVectorIndex(s: SparkSession, path: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    // destructive replace → the save lease (the Dedup.vacuumIndex
-    // rationale): a vacuum racing a save must fail loudly
-    graft.ingest.FileUtils.withSaveLease(path, conf) {
-      val dirs = committedBatchDirs(path, conf)
-      val tomb = tombstoneIds(s, path)
-      val codes = tomb.fold(s.read.parquet(dirs.map(_ + "/codes"): _*))(t =>
-        s.read.parquet(dirs.map(_ + "/codes"): _*)
-          .join(t, Seq("cid"), "left_anti"))
-      // CRASH-ATOMIC manifest swap (the Dedup.vacuumIndex protocol):
-      // stage the compacted generation, flip it live with one atomic
-      // marker create, sweep stale bytes only after the commit point
-      val (gen, stage) = graft.ingest.Generations.stageNextGen(path, conf)
-      codes.write.parquet(s"$stage/b0/codes")
-      graft.ingest.FileUtils.touch(s"$stage/b0/_COMMITTED", conf)
-      // durable consumed record — the append-vs-vacuum retry contract
-      // (see Dedup.vacuumIndex)
-      graft.ingest.Generations.recordConsumed(path, gen, dirs, conf)
-      require(graft.ingest.Generations.commitGeneration(path, gen, conf),
-        s"generation $gen of $path was committed concurrently — " +
-          "another vacuum ran despite the save lease")
-      graft.ingest.Generations.sweepStale(path, conf)
-      rmr(s"$path/forgotten", conf)
-    }
-  }
+  def vacuumVectorIndex(s: SparkSession, path: String): Unit =
+    lifecycle.vacuum(s, path)
 
   /** The training-id refusal remedy, executed ([[forgetFromVectorIndex]]
     * names it): retrain the quantizers and re-encode on `corpus` MINUS
@@ -555,50 +407,15 @@ object VectorIndex {
         "(resize re-partitions subspaces, it cannot change the " +
         "embedding width)")
     // materialized BEFORE the re-save deletes the tombstone parquet it
-    // reads from (the vacuumIndex localCheckpoint rationale)
+    // reads from: a lazy plan would re-read files the save has removed
     val gone = erase.select(col("vec_id").cast("long").as("vec_id"))
-      .unionByName(tombstoneIds(s, path)
+      .unionByName(lifecycle.tombstoneIds(s, path)
         .fold(Seq.empty[Long].toDF("vec_id"))(_.select(col("cid").as("vec_id"))))
       .distinct()
       .localCheckpoint(true)
     val kept = corpus.join(gone,
       corpus("vec_id").cast("long") === gone("vec_id"), "left_anti")
     saveVectorIndex(kept, path, tc, ts, td, tk)
-  }
-
-  // One-shot codes commit, called from the SAVE path (which holds the
-  // exclusive lease — appendVectorIndex owns the self-healing retry).
-  // The id is reserved via an atomic claim-file create BEFORE
-  // anything is written (FileUtils.claimSeqDir): two CONCURRENT
-  // appenders (two streaming jobs, an orchestrator retry racing its
-  // zombie) can never pick the same dir and interleave part files
-  // under one _COMMITTED — the corruption a bare max(existing)+1
-  // listing allows. An abandoned claim's id is never reused, so
-  // partial files can never be mistaken for a later batch's.
-  private def commitCodesBatch(batch: DataFrame, path: String,
-      model: Similarity.IvfPqModel): Unit = {
-    val conf = batch.sparkSession.sparkContext.hadoopConfiguration
-    val bdir = graft.ingest.FileUtils.claimSeqDir(
-      graft.ingest.Generations.currentBatchesDir(path, conf), "b", conf)
-    Similarity.encodeIvfPq(batch, model)
-      .write.mode("overwrite").parquet(s"$bdir/codes")
-    graft.ingest.FileUtils.touch(s"$bdir/_COMMITTED", conf)
-  }
-
-  private def committedBatchDirs(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
-    // live = committed and not retired (the Dedup.retireIndexBatches
-    // contract), within the LIVE generation (a staged vacuum tree
-    // without its gen marker is invisible here): a retired batch is
-    // out of every probe the moment its marker lands, its bytes gone
-    // at the next vacuum
-    val base = graft.ingest.Generations.currentBatchesDir(path, conf)
-    val dirs = graft.ingest.FileUtils.listSubdirs(base, conf)
-      .filter(d => graft.ingest.FileUtils.exists(s"$d/_COMMITTED", conf) &&
-        !graft.ingest.FileUtils.exists(s"$d/_RETIRED", conf))
-    require(dirs.nonEmpty,
-      s"no live committed index batches under $base")
-    dirs
   }
 
   /** QUANTIZER-DRIFT AUDIT — the maintenance loop's trigger for
@@ -626,17 +443,10 @@ object VectorIndex {
       threshold: Double, sampleMod: Int = 1): DataFrame = {
     require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
     val model = loadModel(s, path)
-    val dirs = committedBatchDirs(path, s.sparkContext.hadoopConfiguration)
-    val stored = dirs.map { d =>
-      val bid = new org.apache.hadoop.fs.Path(d).getName
-        .stripPrefix("b").toLong
-      s.read.parquet(s"$d/codes").withColumn("batch_id", lit(bid))
-    }.reduce(_.unionByName(_))
     // tombstoned rows are invisible to every probe (loadCoded), so
     // they must not steer the rebuild trigger either — a logically
     // erased outlier is leaving at the next vacuum, not drift
-    val codes = tombstoneIds(s, path)
-      .fold(stored)(t => stored.join(t, Seq("cid"), "left_anti"))
+    val codes = lifecycle.rowsByBatch(s, path, "codes")
     val sampled = codes.filter(pmod(col("cid"), lit(sampleMod)) === 0)
       .join(raw.select(col("vec_id").cast("long").as("cid"),
         graft.functions.VectorFunctions.asDouble(col("embedding")).as("v")),
@@ -673,28 +483,20 @@ object VectorIndex {
   /** ROLLING-WINDOW retention for the vector index — batches are the
     * arrival order, so a freshness-bounded retrieval corpus (serve
     * only the last N ingestion windows) retires every committed batch
-    * except the newest `keepLast`: one `_RETIRED` marker per expired
+    * except the newest `keepLast`: one retirement marker per expired
     * batch, metadata-only, probes exclude them immediately, bytes
     * drop at [[vacuumVectorIndex]]. The QUANTIZERS are untouched — a
     * retired batch's vectors stop being candidates, which is what
     * retention means; it is NOT right-to-erasure (a training vector's
     * coordinates still live in the model — that path stays
     * [[rebuildVectorIndex]], and [[forgetFromVectorIndex]] still
-    * refuses training ids). Returns the newly retired batch ids.
+    * refuses training ids). Runs under the save lease
+    * ([[graft.ingest.IndexLifecycle.retire]]). Returns the newly
+    * retired batch ids.
     */
   def retireVectorIndexBatches(s: SparkSession, path: String,
-      keepLast: Int): Seq[Long] = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val conf = s.sparkContext.hadoopConfiguration
-    val live = committedBatchDirs(path, conf)
-      .map(d => new org.apache.hadoop.fs.Path(d).getName
-        .stripPrefix("b").toLong).sorted
-    val retire = live.dropRight(keepLast)
-    val base = graft.ingest.Generations.currentBatchesDir(path, conf)
-    retire.foreach(id =>
-      graft.ingest.FileUtils.touch(s"$base/b$id/_RETIRED", conf))
-    retire
-  }
+      keepLast: Int): Seq[Long] =
+    lifecycle.retire(path, s.sparkContext.hadoopConfiguration, keepLast)
 
   // Save the WHOLE corpus, then probe the loaded index: the output
   // must be byte-identical to sim07's from-scratch search (they share
@@ -1569,7 +1371,7 @@ object VectorIndex {
         // no batch encoded under the 8-cell geometry may survive: the
         // nested save's reset cleared every batch tree, leaving ONE
         // fresh full-corpus batch
-        val dirs = committedBatchDirs(path, conf)
+        val dirs = lifecycle.committedBatchDirs(path, conf)
         require(dirs.size == 1,
           s"old-geometry batches must not survive the resize, found $dirs")
         probeVectorIndex(s, path, emb.filter(col("vec_id") < 3))

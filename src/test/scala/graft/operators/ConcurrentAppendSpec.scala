@@ -173,10 +173,12 @@ class ConcurrentAppendSpec extends SparkSpec {
     val emb = Tables(spark, sf0001).embeddings.filter(col("vec_id") < 64)
     Seq(
       ("ndx", (p: String) => Dedup.saveNearDupIndex(docs, p),
-        (p: String) => Dedup.vacuumIndex(spark, p)),
+        (p: String) => Dedup.vacuumIndex(spark, p),
+        (p: String) => Dedup.retireIndexBatches(spark, p, keepLast = 1)),
       ("vidx", (p: String) => VectorIndex.saveVectorIndex(emb, p),
-        (p: String) => VectorIndex.vacuumVectorIndex(spark, p)),
-    ).foreach { case (tag, save, vacuum) =>
+        (p: String) => VectorIndex.vacuumVectorIndex(spark, p),
+        (p: String) => VectorIndex.retireVectorIndexBatches(spark, p, keepLast = 1)),
+    ).foreach { case (tag, save, vacuum, retire) =>
       val path = tmpDir(s"vacuum_lease_$tag").toString
       try {
         save(path)
@@ -189,6 +191,14 @@ class ConcurrentAppendSpec extends SparkSpec {
           s"$tag: vacuum error must name the remedy: ${e.getMessage}")
         assert(FileUtils.exists(s"$path/_SAVING", conf),
           s"$tag: a failed vacuum must not delete the saver's lease")
+        // retire lists and marks batches of ONE generation, so it is
+        // lease-gated too: a save or vacuum landing between the two
+        // would retire the batch holding the kept rows
+        val r = intercept[IllegalArgumentException](retire(path))
+        assert(r.getMessage.contains("delete the lease"),
+          s"$tag: retire error must name the remedy: ${r.getMessage}")
+        assert(FileUtils.exists(s"$path/_SAVING", conf),
+          s"$tag: a failed retire must not delete the saver's lease")
         // remedy → vacuum succeeds, releases the lease, tree stays live
         FileUtils.delete(s"$path/_SAVING", recursive = false, conf)
         vacuum(path)
@@ -197,6 +207,64 @@ class ConcurrentAppendSpec extends SparkSpec {
       } finally FileUtils.rmr(path, conf)
     }
     ()
+  }
+
+  // retire(keepLast = 1) racing a vacuum on a save+append index: the
+  // legal end states are "retire first" (the saved batch retired, the
+  // vacuum compacts the appended one) and "vacuum first" (one
+  // compacted batch, nothing left to retire); either op may lose the
+  // lease loudly. Retiring inside the vacuum's new generation would
+  // retire the compacted batch — every probe then fails.
+  Seq[(String, String => Unit, String => Unit, String => Unit,
+      String => Unit, String => Seq[org.apache.spark.sql.Row])](
+    ("vector index",
+      p => VectorIndex.saveVectorIndex(
+        Tables(spark, sf0001).embeddings.filter(col("vec_id") < 100), p),
+      p => VectorIndex.appendVectorIndex(Tables(spark, sf0001).embeddings
+        .filter(col("vec_id") >= 100 && col("vec_id") < 300), p),
+      p => { VectorIndex.retireVectorIndexBatches(spark, p, keepLast = 1); () },
+      p => VectorIndex.vacuumVectorIndex(spark, p),
+      p => VectorIndex.probeVectorIndex(spark, p,
+        Tables(spark, sf0001).embeddings.filter(col("vec_id") < 3))
+        .collect().toSeq),
+    ("near-dup index",
+      p => Dedup.saveNearDupIndex(Tables(spark, sf0001).documents
+        .filter(col("doc_id") % 7 =!= 3 && col("doc_id") % 3 === 0), p),
+      p => Dedup.appendNearDupIndex(Tables(spark, sf0001).documents
+        .filter(col("doc_id") % 7 =!= 3 && col("doc_id") % 3 =!= 0), p),
+      p => { Dedup.retireIndexBatches(spark, p, keepLast = 1); () },
+      p => Dedup.vacuumIndex(spark, p),
+      p => Dedup.probeNearDupIndex(spark, p, Tables(spark, sf0001).documents
+        .filter(col("doc_id") % 7 === 3)).collect().toSeq),
+  ).foreach { case (family, save, append, retire, vacuum, probe) =>
+    test(s"retire racing a vacuum keeps the appended batch probe-visible ($family)") {
+      def built(tag: String): String = {
+        val p = tmpDir(s"retire_race_$tag").toString
+        save(p); append(p); p
+      }
+      val refAll = built("all")
+      val refRetired = built("retired")
+      retire(refRetired)
+      val wantAll = probe(refAll)
+      val wantRetired = probe(refRetired)
+      assert(wantAll != wantRetired,
+        "precondition: retiring the saved batch must change the probe")
+      (1 to 2).foreach { i =>
+        val path = built(s"r$i")
+        try {
+          def leaseLoserOk(op: String => Unit): () => Unit = () =>
+            try op(path) catch {
+              case e: IllegalArgumentException
+                  if e.getMessage.contains("another save") => ()
+            }
+          inParallel(Seq(leaseLoserOk(retire), leaseLoserOk(vacuum)))
+          val got = probe(path)
+          assert(got == wantRetired || got == wantAll,
+            s"round $i: retire racing vacuum left an illegal end state")
+        } finally FileUtils.rmr(path, conf)
+      }
+      Seq(refAll, refRetired).foreach(FileUtils.rmr(_, conf))
+    }
   }
 
   test("racing savers: at most one wins the lease window; the survivor tree is a valid index") {
